@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.{Gate, MemoBuild, Q}
 
 object Bench {
   type QueryFn = (SparkSession, String) => DataFrame
@@ -372,19 +373,11 @@ object Bench {
     // always covers the full registry.
     val only: Option[Set[String]] =
       sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val sparseSampled = Set("q108_streaming_staleness", "q111_streaming_sessions",
-      "q119_streaming_bars", "q120_streaming_dedup", "q121_streaming_metrics",
-      "q122_streaming_zero_rates", "q123_streaming_msg_counts",
-      "q127_streaming_ann", "q131_streaming_join", "q137_streaming_outer_join",
-      "q138_streaming_tws_sessions", "q139_streaming_file_source",
-      "q149_streaming_available_now", "q152_streaming_restart",
-      "q153_streaming_late_drop", "q154_foreach_batch_sink",
-      "q155_streaming_chained_aggs", "q159_stateful_restart",
-      "q204_streaming_tagging", "q208_streaming_upsert",
-      "q220_streaming_range_join", "q304_streaming_salted_staleness",
-      "q311_streaming_erasure", "q314_streaming_erasure_delta")
+    val registry = SparkEntry.registry.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
+    val ordered = registry.map(q => q.name -> q.run)
+    val gates = registry.collect { case Q(n, _, _, _: Gate) => n }.toSet
+    val memoBuild = registry.collect { case Q(n, _, _, MemoBuild) => n }.toSet
 
     val warmDir = {
       val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
@@ -402,9 +395,7 @@ object Bench {
       require(n >= 1, s"GRAFT_BENCH_ROUNDS must be >= 1, got $v")
       n
     }.getOrElse(3)
-    val memoBuild = Set("q301_bucketed_fact_join", "q302_bucket_pruning",
-      "q307_bloom_file_skip", "q315_bloom_index_append")
-    val run = sample(spark, ordered, sfDir, warmDir, sparseSampled, nRounds, memoBuild)
+    val run = sample(spark, ordered, sfDir, warmDir, gates, nRounds, memoBuild)
 
     run.results.foreach { case (name, sec) =>
       val times = run.sampleRounds.flatMap(_.get(name))

@@ -21,6 +21,9 @@ object SparkEntry {
 
   private lazy val qs: Seq[Q] = registries.flatMap(_.all)
 
+  /** Every registry query with its declared `kind`, in registry order. */
+  def registry: Seq[Q] = qs
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     qs.head.run(spark, "/root/testdata/sf0.001")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Reusable corpus-curation operators (the round-8 curation registry's
   * extracted library surface — each function is the exact dataflow its
@@ -49,13 +50,11 @@ object Curation {
     array_max(array(hs: _*)).getField("s")
   }
 
-  /** Robust outliers by MAD: rows where |value − median| > k·MAD within
-    * their group, with exact floor-index medians (q186). Two aggregation
-    * passes by construction; the per-group scalars broadcast back.
-    * Output = input columns plus `med` and `mad`.
+  /** Median/MAD deviation with exact floor-index medians (q186, q234): two
+    * aggregation passes, the per-group scalars broadcast back. Output =
+    * input columns plus `med`, `adev` (|value − med|) and `mad`.
     */
-  def madOutliers(df: DataFrame, group: String, value: String,
-      k: Double): DataFrame = {
+  def madDeviation(df: DataFrame, group: String, value: String): DataFrame = {
     import graft.functions.ExactPercentile
     val med = df.groupBy(group)
       .agg(element_at(ExactPercentile(col(value), Seq(0.5)), 1).as("med"))
@@ -64,9 +63,35 @@ object Curation {
     val mad = dev.groupBy(group)
       .agg(element_at(ExactPercentile(col("adev"), Seq(0.5)), 1).as("mad"))
     dev.join(broadcast(mad), group)
+  }
+
+  /** Robust outliers by MAD: rows where |value − median| > k·MAD within
+    * their group (q186). Output = input columns plus `med` and `mad`.
+    */
+  def madOutliers(df: DataFrame, group: String, value: String,
+      k: Double): DataFrame =
+    madDeviation(df, group, value)
       .filter(col("adev") > lit(k) * col("mad"))
       .drop("adev")
-  }
+
+  /** Exact per-column COUNT(DISTINCT), dedupe-first (q134, q293): distinct
+    * (col_name, value-string) pairs, then count(v) per column (NULLs
+    * excluded). Parity needs each cast injective under COUNT(DISTINCT)'s
+    * equality, so floating columns get `+ 0.0` first: −0.0 and 0.0 render
+    * differently but count once. Timestamps render in the UTC session zone.
+    * Output: (col_name, n_distinct) for columns with a non-null value.
+    */
+  def distinctCounts(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.select(explode(array(cols.map { c =>
+        val v = df.schema(c).dataType match {
+          case DoubleType | FloatType => col(c) + lit(0.0)
+          case _                      => col(c)
+        }
+        struct(lit(c).as("c"), v.cast("string").as("v"))
+      }: _*)).as("p"))
+      .select(col("p.c").as("col_name"), col("p.v").as("v"))
+      .distinct()
+      .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
 
   /** Per-group fraction-trimmed mean via exact decimal sums (q195):
     * drops the lowest/highest ⌊n·frac⌋ by rank, averages the core.

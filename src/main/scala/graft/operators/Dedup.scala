@@ -341,8 +341,6 @@ object Dedup {
       require(rounds <= 64, "large-star/small-star CC failed to converge in 64 rounds")
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nextSig = sig(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$rounds edges=${nextSig._1}")
       converged = nextSig == curSig
       edges = next
       curSig = nextSig

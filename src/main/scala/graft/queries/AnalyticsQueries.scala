@@ -816,10 +816,8 @@ object AnalyticsQueries extends Registry {
   /** Robust anomaly detection via median/MAD (Hampel's 3-MAD rule —
     * the outlier screen that survives the outliers it hunts, where
     * mean±3σ is dragged by the very tail it should flag): per event
-    * type, the exact floor-index median (q9's ExactPercentile device),
-    * the median absolute deviation around it, and the count of values
-    * past 3·MAD. Inherently two-pass (the deviation needs the median
-    * first); pass results join back as |keys|-row broadcasts.
+    * type, the median, the MAD around it (Curation.madDeviation, q186's
+    * two passes) and the count of values past 3·MAD.
     *
     * Scale: three scans but every aggregate is per-key partial/final
     * and both join sides after pass 1 are |event_types| rows — the scan
@@ -828,20 +826,13 @@ object AnalyticsQueries extends Registry {
     */
   private val q234 = Q("q234_mad_outliers",
     (s, d) => {
-      import graft.functions.ExactPercentile
       val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-      val med = ev.groupBy("event_type")
-        .agg(element_at(ExactPercentile(col("value"), Seq(0.5)), 1).as("med"))
-      val dev = ev.join(med, "event_type")
-        .withColumn("dev", abs(col("value") - col("med")))
-      val mad = dev.groupBy("event_type")
-        .agg(element_at(ExactPercentile(col("dev"), Seq(0.5)), 1).as("mad"))
-      dev.join(mad, "event_type")
+      graft.operators.Curation.madDeviation(ev, "event_type", "value")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           max(col("med")).as("med"),
           max(col("mad")).as("mad"),
-          sum(when(col("dev") > lit(3.0d) * col("mad"), 1L).otherwise(0L))
+          sum(when(col("adev") > lit(3.0d) * col("mad"), 1L).otherwise(0L))
             .as("n_outliers"))
         .withColumn("outlier_rate",
           col("n_outliers").cast("double") / col("n").cast("double"))

@@ -1341,7 +1341,7 @@ object CurationQueries extends Registry {
       } finally query.stop()
       tagAggregate(s.table(sinkName), docs)
     },
-    Some(tagOracleSql))
+    Some(tagOracleSql), kind = Gate(stateful = false))
 
   /** Per-source language purity via Gini impurity (1 − Σ p²) — the
     * log-free concentration measure (entropy needs libm `ln`, which no
@@ -1953,7 +1953,7 @@ object CurationQueries extends Registry {
         FROM t)
       SELECT doc_id, source, n_toks, cum_toks,
         cum_toks <= 500 AS admitted
-      FROM c ORDER BY doc_id"""))
+      FROM c ORDER BY doc_id"""), kind = Gate(stateful = false))
 
   override val all: Seq[Q] = Seq(q177, q178, q179, q180, q181, q182, q183,
     q184, q185, q186, q188, q189, q190, q191, q192, q193, q194, q195, q196,

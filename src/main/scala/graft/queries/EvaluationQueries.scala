@@ -149,13 +149,7 @@ object EvaluationQueries extends Registry {
           max(col(c)).cast("string").as(s"${c}__mx"))
       }
       val stats = o.agg(statsExprs.head, statsExprs.tail: _*)
-      val dist = o
-        .select(explode(array(cols.map { c =>
-          struct(lit(c).as("c"), col(c).cast("string").as("v"))
-        }: _*)).as("p"))
-        .select(col("p.c").as("col_name"), col("p.v").as("v"))
-        .distinct()
-        .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+      val dist = graft.operators.Curation.distinctCounts(o, cols)
       def pick(suffix: String) =
         cols.tail.foldLeft(
           when(col("col_name") === cols.head, col(s"${cols.head}__$suffix"))) {

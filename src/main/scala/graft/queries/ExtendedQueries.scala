@@ -698,7 +698,7 @@ object ExtendedQueries extends Registry {
         ${O.lstdSamp("gap_ms")} AS stale_std_ms,
         MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
       FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+      GROUP BY user_id ORDER BY user_id"""), kind = Gate(stateful = true))
 
   /** Window-aggregate closure: percentile_disc and mode as WINDOW
     * aggregates (the two gaps a mature engine's window surface still had
@@ -855,7 +855,7 @@ object ExtendedQueries extends Registry {
       SELECT user_id, MIN(ms) AS session_start_ms,
         MAX(ms) + 1800000 AS session_end_ms,
         COUNT(*) AS cnt, ${O.dsum("value")} AS total_value
-      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""))
+      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""), kind = Gate(stateful = true))
 
   /** Sliding-frame discrete percentiles (q109's partition-wide
     * percentile_disc taken to bounded moving frames): trailing-20-row
@@ -1110,7 +1110,7 @@ object ExtendedQueries extends Registry {
         CAST(COUNT(*) AS BIGINT) AS n_trades
       FROM tr WHERE symbol = 'T-0' AND src_id % 4 = 0
       GROUP BY symbol, day_bucket
-      ORDER BY symbol, day_bucket"""))
+      ORDER BY symbol, day_bucket"""), kind = Gate(stateful = true))
 
   private val q120Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1158,7 +1158,7 @@ object ExtendedQueries extends Registry {
     },
     Some("""SELECT md5(props) AS content_hash
       FROM (SELECT DISTINCT props FROM events)
-      ORDER BY content_hash"""))
+      ORDER BY content_hash"""), kind = Gate(stateful = true))
 
   private val q121Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1252,7 +1252,7 @@ object ExtendedQueries extends Registry {
         MAX(CASE WHEN rn = CAST(floor(0.99::DOUBLE * (n-1)) AS BIGINT) THEN value END) AS p99,
         CAST(COUNT(*) AS BIGINT) AS cnt
       FROM r GROUP BY window_start_ms HAVING COUNT(*) >= 20
-      ORDER BY window_start_ms"""))
+      ORDER BY window_start_ms"""), kind = Gate(stateful = true))
 
   private val q122Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1300,7 +1300,7 @@ object ExtendedQueries extends Registry {
       CAST(SUM(CASE WHEN CAST(floor(value) AS BIGINT) // 20 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS zeros,
       CAST(SUM(CASE WHEN CAST(floor(value) AS BIGINT) // 20 = 0 THEN 1 ELSE 0 END) AS DOUBLE)
         / greatest(COUNT(*), 1) * 100.0 AS zero_rate_pct
-      FROM events"""))
+      FROM events"""), kind = Gate(stateful = true))
 
   private val q123Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1343,7 +1343,7 @@ object ExtendedQueries extends Registry {
         .orderBy("user_id")
     },
     Some("""SELECT user_id, COUNT(*) AS msg_count FROM events
-      GROUP BY user_id ORDER BY user_id"""))
+      GROUP BY user_id ORDER BY user_id"""), kind = Gate(stateful = true))
 
   /** Recursive CTE (Spark 4.1's `WITH RECURSIVE`, planned as UnionLoop):
     * hierarchy walk from every customer up a synthetic reporting chain
@@ -1495,7 +1495,7 @@ object ExtendedQueries extends Registry {
         AND i.event_id % 2 = 0 AND c.event_id % 2 = 1
         AND epoch_ms(c.ts) BETWEEN epoch_ms(i.ts) AND epoch_ms(i.ts) + 86400000
       WHERE i.user_id < 50
-      ORDER BY imp_id, clk_id"""))
+      ORDER BY imp_id, clk_id"""), kind = Gate(stateful = true))
 
   /** Calendar-interval RANGE frames: per-customer trailing-30-day order
     * revenue over the ACTUAL order dates (q81's numeric RANGE frame uses
@@ -1589,7 +1589,7 @@ object ExtendedQueries extends Registry {
         ${O.lstdSamp("gap_ms")} AS stale_std_ms,
         MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
       FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+      GROUP BY user_id ORDER BY user_id"""), kind = Gate(stateful = true))
 
   private val q136Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1709,7 +1709,7 @@ object ExtendedQueries extends Registry {
       LEFT JOIN (SELECT * FROM events WHERE event_id % 2 = 1) c
         ON i.user_id = c.user_id
         AND epoch_ms(c.ts) BETWEEN epoch_ms(i.ts) AND epoch_ms(i.ts) + 86400000
-      ORDER BY imp_id, clk_id"""))
+      ORDER BY imp_id, clk_id"""), kind = Gate(stateful = true))
 
   private val q138Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1778,7 +1778,7 @@ object ExtendedQueries extends Registry {
       SELECT user_id, MIN(ms) AS session_start_ms,
         MAX(ms) + 1800000 AS session_end_ms,
         CAST(COUNT(*) AS BIGINT) AS cnt, ${O.dsum("value")} AS total_value
-      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""))
+      FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_ms"""), kind = Gate(stateful = true))
 
   private val q139Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1821,7 +1821,7 @@ object ExtendedQueries extends Registry {
         .orderBy("user_id")
     },
     Some("""SELECT user_id, COUNT(*) AS msg_count FROM events
-      GROUP BY user_id ORDER BY user_id"""))
+      GROUP BY user_id ORDER BY user_id"""), kind = Gate(stateful = true))
 
   private val q148Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1922,7 +1922,7 @@ object ExtendedQueries extends Registry {
     },
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
         ${O.dsum("value")} AS total_value
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+      FROM events GROUP BY event_type ORDER BY event_type"""), kind = Gate(stateful = true))
 
   private val q152Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1976,7 +1976,7 @@ object ExtendedQueries extends Registry {
     },
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
         ${O.dsum("value")} AS total_value
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+      FROM events GROUP BY event_type ORDER BY event_type"""), kind = Gate(stateful = true))
 
   private val q153Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -2080,7 +2080,7 @@ object ExtendedQueries extends Registry {
         CAST(COUNT(*) AS BIGINT) AS cnt,
         ${O.dsum("value")} AS total_value
       FROM e GROUP BY window_start_ms, event_type
-      ORDER BY window_start_ms, event_type"""))
+      ORDER BY window_start_ms, event_type"""), kind = Gate(stateful = true))
 
   private val q154Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -2148,7 +2148,7 @@ object ExtendedQueries extends Registry {
     },
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
         ${O.dsum("value")} AS total_value
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+      FROM events GROUP BY event_type ORDER BY event_type"""), kind = Gate(stateful = false))
 
   private val q155Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -2228,7 +2228,7 @@ object ExtendedQueries extends Registry {
         CAST(COUNT(*) AS BIGINT) AS n_quarters,
         CAST(SUM(q_cnt) AS BIGINT) AS n_events
       FROM q GROUP BY window_start_ms, event_type
-      ORDER BY window_start_ms, event_type"""))
+      ORDER BY window_start_ms, event_type"""), kind = Gate(stateful = true))
 
   /** Higher-order-function closure over array columns: transform / filter /
     * exists / aggregate (left fold) / zip_with / slice / sort, all evaluated
@@ -2340,7 +2340,7 @@ object ExtendedQueries extends Registry {
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
         CAST(SUM(event_id) AS BIGINT) AS id_sum,
         CAST(COUNT(DISTINCT chunk) AS BIGINT) AS n_emissions
-      FROM c GROUP BY user_id ORDER BY user_id"""))
+      FROM c GROUP BY user_id ORDER BY user_id"""), kind = Gate(stateful = true))
 
   private val q236Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -2405,7 +2405,7 @@ object ExtendedQueries extends Registry {
       FULL JOIN (SELECT * FROM events WHERE event_id % 2 = 1 AND user_id < 50) c
         ON i.user_id = c.user_id
         AND epoch_ms(c.ts) BETWEEN epoch_ms(i.ts) AND epoch_ms(i.ts) + 86400000
-      ORDER BY imp_id, clk_id"""))
+      ORDER BY imp_id, clk_id"""), kind = Gate(stateful = true))
 
   private val q256Runs = new java.util.concurrent.atomic.AtomicInteger
 
@@ -2481,7 +2481,7 @@ object ExtendedQueries extends Registry {
       SELECT chunk, CAST(COUNT(*) AS BIGINT) AS n_rows,
         CAST(SUM(CASE WHEN value > 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
         ${O.dsum("value")} AS value_sum
-      FROM c GROUP BY chunk ORDER BY chunk"""))
+      FROM c GROUP BY chunk ORDER BY chunk"""), kind = Gate(stateful = false))
 
   /** Interval union (gaps-and-islands): total COVERED time per user over
     * overlapping activity intervals — the classic de-overlap that naive

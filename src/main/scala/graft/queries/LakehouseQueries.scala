@@ -115,7 +115,7 @@ object LakehouseQueries extends Registry {
       r AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey
           ORDER BY ver DESC) AS rn FROM log)
       SELECT o_orderkey, CAST(ver AS BIGINT) AS ver, price FROM r
-      WHERE rn = 1 AND op <> 'D' ORDER BY o_orderkey"""))
+      WHERE rn = 1 AND op <> 'D' ORDER BY o_orderkey"""), kind = Gate(stateful = true))
 
   private val q209Runs = new java.util.concurrent.atomic.AtomicInteger
 
@@ -786,7 +786,7 @@ object LakehouseQueries extends Registry {
         ${graft.OracleSql.dsum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
         CAST(COUNT(*) AS BIGINT) AS n_items
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderkey, o_orderstatus"""))
+      GROUP BY o_orderkey, o_orderstatus"""), kind = MemoBuild)
 
   /** Bucket pruning: an equality predicate on the bucket key reads ONLY
     * the matching bucket's files (`SelectedBucketsCount: 1 out of 8`,
@@ -855,7 +855,7 @@ object LakehouseQueries extends Registry {
       SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_items,
         ${graft.OracleSql.dsum("l_quantity")} AS sum_qty
       FROM lineitem, ks WHERE l_orderkey = k1 OR l_orderkey = k2
-      GROUP BY l_orderkey"""))
+      GROUP BY l_orderkey"""), kind = MemoBuild)
 
   /** Clustering-depth census (the Snowflake/Databricks re-cluster trigger
     * metric): given a layout key (order date), how many files' [min,max]
@@ -1172,7 +1172,7 @@ object LakehouseQueries extends Registry {
         SELECT e.event_id, e.user_id, e.event_type, e.value
         FROM events e JOIN probes p ON e.event_id = p.event_id
         ORDER BY e.event_id"""
-    })
+    }, kind = MemoBuild)
 
   /** Per-(JVM, sfDir) memo of the q315 incrementally-maintained index:
     * a BASE corpus (events with event_id % 16 ≠ 15, hash-scattered into
@@ -1360,7 +1360,7 @@ object LakehouseQueries extends Registry {
         SELECT e.event_id, e.user_id, e.event_type, e.value
         FROM events e JOIN probes p ON e.event_id = p.event_id
         ORDER BY e.event_id"""
-    })
+    }, kind = MemoBuild)
 
   override val all: Seq[Q] = Seq(q208, q209, q210, q211, q224, q238, q239,
     q240, q244, q250, q257, q268, q301, q302, q305, q307, q315)

@@ -9,15 +9,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None)
+    oracle: Option[String] = None,
+    kind: QueryKind = Batch)
+
+/** What a query's `run` does, declared once per query: Bench's sampling and
+  * PlanAudit's batch/stream split derive from it, and PlanInvariantsSpec
+  * checks it against the StreamingQuerys each query really starts.
+  *  - Batch: builds a batch DataFrame (the default);
+  *  - MemoBuild: its first run per (JVM, sf dir) pays a one-time build (a
+  *    bucketed table, a Bloom index), which Bench primes untimed;
+  *  - Gate: a replay gate that starts its streams through [[StreamGate]];
+  *    `stateful` = its executed micro-batch plan holds a state operator.
+  */
+sealed trait QueryKind
+case object Batch extends QueryKind
+case object MemoBuild extends QueryKind
+final case class Gate(stateful: Boolean) extends QueryKind
 
 trait Registry {
   def all: Seq[Q]
 }
 
-/** Shared harness for the streaming replay gates (q108, q111, q119-q123,
-  * q127, q131, q133).
-  */
+/** Shared harness for the streaming replay gates (the queries whose
+  * `Q.kind` is a [[Gate]]). */
 private[graft] object StreamGate {
 
   /** Clamp shuffle (= streaming state-store) partitions around a replay
@@ -90,16 +104,13 @@ private[graft] object StreamGate {
     // Production sizing is the opposite trade (billion-row batches
     // amortize one compile in ms), which is why this clamps only the
     // gate's cloned session, never the batch session.
-    // GRAFT_STREAM_CODEGEN=true restores stock behavior for A/Bs.
-    val cg = sys.env.get("GRAFT_STREAM_CODEGEN")
-      .getOrElse(if (keepCodegen) "true" else "false")
     val prev = s.conf.get(key)
     val prevNd = s.conf.get(ndKey)
     val prevCg = s.conf.get(cgKey)
     val prevExtra = extraConfs.map { case (k, _) => k -> s.conf.getOption(k) }
     s.conf.set(key, eff.toString)
     s.conf.set(ndKey, noDataBatches.toString)
-    s.conf.set(cgKey, cg)
+    s.conf.set(cgKey, keepCodegen.toString)
     extraConfs.foreach { case (k, v) => s.conf.set(k, v) }
     try {
       val r = body
@@ -121,7 +132,7 @@ private[graft] object StreamGate {
   }
 
   /** Plan-attestation hook: every StreamingQuery started through
-    * [[withStatePartitions]] (all 22 gates funnel their `.start()` here)
+    * [[withStatePartitions]] (every [[Gate]] funnels its `.start()` here)
     * is recorded while capture is on, so the plan-invariant harness can
     * read each handle's `lastExecution` — the executed micro-batch plan —
     * AFTER the gate returns: the IncrementalExecution object outlives

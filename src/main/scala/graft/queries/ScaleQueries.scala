@@ -367,7 +367,7 @@ object ScaleQueries extends Registry {
         event_type, CAST(COUNT(*) AS BIGINT) AS cnt,
         ${O.dsum("value")} AS total_value
       FROM events GROUP BY window_start_ms, event_type
-      ORDER BY window_start_ms, event_type"""))
+      ORDER BY window_start_ms, event_type"""), kind = Gate(stateful = true))
 
   /** Two-level Datasketches HLL rollup (`hll_sketch_agg` →
     * `hll_union_agg`): per-(type, day) sketches — the shape a 100 TB
@@ -714,7 +714,7 @@ object ScaleQueries extends Registry {
       SELECT interval_id, CAST(COUNT(*) AS BIGINT) AS n_points,
         ${O.dsum("value")} AS sum_value
       FROM events e JOIN iv ON e.value >= iv.lo AND e.value <= iv.hi
-      GROUP BY interval_id ORDER BY interval_id"""))
+      GROUP BY interval_id ORDER BY interval_id"""), kind = Gate(stateful = false))
 
   /** Decimal twin of q219 — the price-band range join as real market-data
     * lakes store it: DECIMAL price points against DECIMAL band bounds.
@@ -1391,7 +1391,7 @@ object ScaleQueries extends Registry {
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         CAST(SUM(event_id) AS BIGINT) AS id_sum,
         ${O.dsum("value")} AS value_sum
-      FROM events GROUP BY event_type ORDER BY event_type"""))
+      FROM events GROUP BY event_type ORDER BY event_type"""), kind = Gate(stateful = false))
 
   /** Salted window with boundary repair — the documented mitigation for
     * per-key WINDOW skew (q8's shape), now gated. AQE's skew split only
@@ -1592,7 +1592,7 @@ object ScaleQueries extends Registry {
         ${O.lstdSamp("gap_ms")} AS stale_std_ms,
         MIN(gap_ms) AS stale_min_ms, MAX(gap_ms) AS stale_max_ms
       FROM g WHERE gap_ms IS NOT NULL
-      GROUP BY user_id ORDER BY user_id"""))
+      GROUP BY user_id ORDER BY user_id"""), kind = Gate(stateful = false))
 
   private val q311Runs = new java.util.concurrent.atomic.AtomicLong()
 
@@ -1699,7 +1699,7 @@ object ScaleQueries extends Registry {
         FROM events e
         WHERE NOT EXISTS (SELECT 1 FROM del WHERE del.user_id = e.user_id)
         GROUP BY event_type ORDER BY event_type"""
-    })
+    }, kind = Gate(stateful = false))
 
   private val q314Runs = new java.util.concurrent.atomic.AtomicLong()
   private val DeltaBuckets = 8
@@ -1899,7 +1899,7 @@ object ScaleQueries extends Registry {
         FROM events e
         WHERE NOT EXISTS (SELECT 1 FROM del WHERE del.user_id = e.user_id)
         GROUP BY event_type ORDER BY event_type"""
-    })
+    }, kind = Gate(stateful = false))
 
   override val all: Seq[Q] =
     Seq(q156, q157, q158, q159, q160, q161, q162, q216, q217, q219, q220,

@@ -1723,7 +1723,7 @@ object TrainingDataQueries extends Registry {
         .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cos_sim"))
         .orderBy("qid", "rank")
     },
-    Some(lshTopKOracle))
+    Some(lshTopKOracle), kind = Gate(stateful = false))
 
   /** Column profiling — the data-quality report every ingest runs before
     * training: per-column row/null/exact-distinct counts and min/max
@@ -1747,11 +1747,9 @@ object TrainingDataQueries extends Registry {
       // task CPU at sf0.1 for a 600k-row scan. Split into (a) one plain
       // single-group pass for the non-distinct stats (tiny buffer, no
       // Expand) and (b) ONE dedupe-first pass for all four exact distinct
-      // counts: explode to (col_name, value-string) pairs — the casts are
-      // injective per column (long/decimal/string/date all render
-      // canonically), so distinct pair count == exact COUNT(DISTINCT) —
-      // dedupe map-side, then count per column with count(v) (NULLs
-      // excluded, matching COUNT(DISTINCT)). The shuffle carries distinct
+      // counts over (col_name, value-string) pairs (Curation.distinctCounts:
+      // long, double, string and timestamp values, each cast injective
+      // under COUNT(DISTINCT)'s equality). The shuffle carries distinct
       // (name, value) pairs with zero aggregation buffers, which is also
       // the 100 TB shape: map-side partial distinct bounds the exchange
       // by Σ|distinct(c)|, not |rows|, and no wide buffer rides per group.
@@ -1763,13 +1761,7 @@ object TrainingDataQueries extends Registry {
           max(col(c)).cast("string").as(s"${c}__mx"))
       }
       val stats = li.agg(statsExprs.head, statsExprs.tail: _*)
-      val dist = li
-        .select(explode(array(cols.map { c =>
-          struct(lit(c).as("c"), col(c).cast("string").as("v"))
-        }: _*)).as("p"))
-        .select(col("p.c").as("col_name"), col("p.v").as("v"))
-        .distinct()
-        .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+      val dist = graft.operators.Curation.distinctCounts(li, cols)
       def pick(suffix: String) =
         cols.tail.foldLeft(
           when(col("col_name") === cols.head, col(s"${cols.head}__$suffix"))) {
@@ -2774,7 +2766,7 @@ object TrainingDataQueries extends Registry {
           col("contaminated"))
         .orderBy("doc_id")
     },
-    Some(cascadeOracle))
+    Some(cascadeOracle), kind = Gate(stateful = false))
 
   override val all: Seq[Q] = Seq(q20, q21, q22, q23, q24, q25, q26, q27,
     q28, q29, q30, q31, q32, q33, q34, q38, q41, q42, q43, q44, q45, q47, q107, q112, q114, q115,

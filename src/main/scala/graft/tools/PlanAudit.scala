@@ -3,7 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.{Gate, Q, StreamGate}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Physical-plan attestation, two artifacts from one pass:
   *
@@ -23,36 +25,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{ sbt -batch "runMain graft.tools.PlanAudit" }}}
   */
 object PlanAudit {
-
-  /** Queries whose `run` executes a Structured Streaming replay gate and
-    * returns the materialized sink table — there is no batch physical plan
-    * to audit (the returned DataFrame is a memory/parquet batch read of
-    * results). Their evidence is the gate spec + bench_stages attribution;
-    * PLANS.md carries a topology note for each.
-    */
-  val streamingGates: Set[String] = Set(
-    "q108_streaming_staleness", "q111_streaming_sessions",
-    "q119_streaming_bars", "q120_streaming_dedup", "q121_streaming_metrics",
-    "q122_streaming_zero_rates", "q123_streaming_msg_counts",
-    "q127_streaming_ann", "q131_streaming_join", "q133_streaming_tws_staleness",
-    "q137_streaming_outer_join", "q138_streaming_tws_sessions",
-    "q139_streaming_file_source", "q149_streaming_available_now",
-    "q152_streaming_restart", "q153_streaming_late_drop",
-    "q154_foreach_batch_sink", "q155_streaming_chained_aggs",
-    "q159_stateful_restart", "q204_streaming_tagging",
-    "q208_streaming_upsert", "q220_streaming_range_join",
-    "q235_streaming_update_mode", "q236_streaming_full_outer",
-    "q304_streaming_salted_staleness", "q311_streaming_erasure",
-    "q314_streaming_erasure_delta")
-
-  /** Batch registry queries in name order — the plan-audited surface. */
-  def batchQueryNames: Seq[String] =
-    graft.SparkEntry.queries.keys.toSeq.filterNot(streamingGates).sorted
-
-  /** Streaming gates in name order — audited via their executed
-    * micro-batch plans (captured through StreamGate). */
-  def streamingQueryNames: Seq[String] =
-    graft.SparkEntry.queries.keys.toSeq.filter(streamingGates).sorted
 
   /** One plan-shape invariant record, derived purely from
     * `explain("formatted")` text so it captures exactly what a human plan
@@ -113,8 +85,7 @@ object PlanAudit {
   /** Formatted explain text for a registry query (initial physical plan;
     * AQE re-optimizes exchanges at runtime but node shape is what we pin). */
   def planText(spark: SparkSession, name: String, sf: String): String =
-    graft.SparkEntry.queries(name)(spark, sf)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    graft.SparkEntry.queries(name)(spark, sf).queryExecution.explainString(FormattedMode)
 
   private val treeNode = """^[\s+:|-]*(?:\* )?([A-Za-z][A-Za-z ]*?)\s*\((\d+)\)\s*$""".r
   private val locRe = """Location:.*[/\[]([^/\]]+\.parquet)[^/]*\]?\s*$""".r.unanchored
@@ -161,9 +132,6 @@ object PlanAudit {
       scansWithPushdown = pushed.count(identity),
       readSchemas = readSchemas)
   }
-
-  def record(spark: SparkSession, name: String, sf: String): PlanRecord =
-    record(name, planText(spark, name, sf))
 
   /** Stateful streaming operator node names as they print in a
     * SparkPlan tree (nodeName strips the Exec suffix). */
@@ -219,13 +187,30 @@ object PlanAudit {
       mode = lastExec(queries.last).outputMode.toString)
   }
 
-  /** Run one streaming gate under capture and derive its record. */
-  def streamRecord(spark: SparkSession, name: String, sf: String): PlanRecord = {
-    val (_, qs) = graft.queries.StreamGate.captureStreamingQueries {
-      graft.SparkEntry.queries(name)(spark, sf).count() // drive the gate
+  /** One registry query, run once under
+    * `StreamGate.captureStreamingQueries`: its record (from the executed
+    * micro-batch plans when it started streams, else from the formatted
+    * explain in `plan`) and how many StreamingQuerys it started. */
+  final case class Audit(record: PlanRecord, plan: Option[String], streams: Int)
+
+  def audit(spark: SparkSession, q: Q, sf: String): Audit = {
+    val (df, started) = StreamGate.captureStreamingQueries {
+      val df = q.run(spark, sf)
+      if (q.kind.isInstanceOf[Gate]) df.count() // drive the gate
+      df
     }
-    streamRecord(name, qs)
+    if (started.nonEmpty) Audit(streamRecord(q.name, started), None, started.size)
+    else {
+      val plan = df.queryExecution.explainString(FormattedMode)
+      Audit(record(q.name, plan), Some(plan), 0)
+    }
   }
+
+  /** Where a query's declared `kind` disagrees with what it ran: a Gate
+    * starts StreamingQuerys through StreamGate, nothing else does. */
+  def kindError(q: Q, streams: Int): Option[String] =
+    Option.when(q.kind.isInstanceOf[Gate] != (streams > 0))(
+      s"${q.name} is declared ${q.kind} but started $streams StreamingQuery(s)")
 
   /** The SF both the generator and PlanInvariantsSpec plan against — the
     * driver's correctness SF, so broadcast-threshold decisions in the
@@ -489,7 +474,15 @@ object PlanAudit {
     "q235_streaming_update_mode" ->
       "Update-output-mode gate (r09): keyed aggregate emitting ONLY changed keys per micro-batch; the memory sink accumulates the update log, so per-key emission count equals batches-that-touched-the-key — recomputed by the oracle from the deterministic 3-chunk split. Completes the sink-mode matrix (append/complete/update).",
     "q236_streaming_full_outer" ->
-      "Stream-stream FULL OUTER attribution join (r09): matched pairs plus watermark-flushed unconverted impressions AND orphan clicks, each emitted once (the q137 two-sentinel advance protocol); hash-matched against the batch FULL JOIN. Completes the stream-join output-type matrix (inner/leftOuter/fullOuter); state bound identical to q137.")
+      "Stream-stream FULL OUTER attribution join (r09): matched pairs plus watermark-flushed unconverted impressions AND orphan clicks, each emitted once (the q137 two-sentinel advance protocol); hash-matched against the batch FULL JOIN. Completes the stream-join output-type matrix (inner/leftOuter/fullOuter); state bound identical to q137.",
+    "q256_streaming_observe" ->
+      "Per-micro-batch observable metrics: a stateless append-mode pass-through of a 3-chunk MemoryStream replay whose `observe` node (CollectMetrics, no state store) folds row/high-value/decimal-sum counters map-side; each batch's counters are read from StreamingQueryProgress.observedMetrics, one output row per batch.",
+    "q275_foreachbatch_exactly_once" ->
+      "foreachBatch exactly-once file sink: a stateless file-source stream (maxFilesPerTrigger=1) writes each batch TWICE into its own batchId directory with overwrite, is stopped mid-spool and resumed from its checkpoint by a new query; the union of batch directories must equal the batch oracle.",
+    "q318_streaming_decontam" ->
+      "Online decontamination: the q316 Bloom + exact-shingle cascade runs inside foreachBatch against a holdout index built once before the stream; stateless in the engine (each decision depends only on the doc and the fixed index), decisions land in batchId-keyed parquet.",
+    "q320_streaming_token_quota" ->
+      "Online per-source token quota: foreachBatch joins each batch's running token sums against the previous batch's |sources|-row ledger in batchId-versioned parquet — the q304 device, so the engine plan holds no state operator; decisions reproduce the whole-corpus prefix-sum oracle.")
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get("plan-audit", "8")
@@ -502,55 +495,57 @@ object PlanAudit {
     // data volume.
     val outDir = args.lift(1).getOrElse("docs")
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val allNames = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val qs = graft.SparkEntry.registry.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
+    val nGates = qs.count(_.kind.isInstanceOf[Gate])
     val sb = new StringBuilder
     sb.append("# Physical plan audit\n\n")
     sb.append(s"Generated by `graft.tools.PlanAudit` against `$sf` " +
-      s"(${allNames.size} registry queries: ${allNames.size - streamingGates.size} " +
-      "batch plans + " + streamingGates.size + " streaming-gate topology notes).\n")
+      s"(${qs.size} registry queries: ${qs.size - nGates} " +
+      s"batch plans + $nGates streaming-gate topology notes).\n")
     sb.append("AQE is enabled; plans below are the initial physical plans " +
       "(AQE re-optimizes exchanges at runtime). Plan-shape invariants for " +
       "every batch query are pinned in `docs/plan_invariants.tsv` and " +
       "asserted by `PlanInvariantsSpec` on every `sbt test` run.\n\n")
     val records = scala.collection.mutable.ArrayBuffer.empty[PlanRecord]
-    allNames.foreach { name =>
-      if (streamingGates(name)) {
-        val note = streamingNotes.getOrElse(name, "streaming gate")
-        val rec = streamRecord(spark, name, sf)
-        records += rec
-        sb.append(s"## $name (streaming gate)\n\n$note\n\n")
-        sb.append(s"Executed micro-batch plan invariants (last batch): " +
-          s"state_ops=${rec.stateOps}, mode=${rec.mode}, " +
-          s"exchanges=${rec.exchanges}, bnlj=${rec.bnlj}, " +
-          s"cartesian=${rec.cartesian}.\n\n")
-      } else {
-        val note = audited.getOrElse(name,
-          "Auto-audited: plan-shape invariants pinned in plan_invariants.tsv (PlanInvariantsSpec).")
-        val plan = planText(spark, name, sf)
-        records += record(name, plan)
-        sb.append(s"## $name\n\n$note\n\n```\n")
-        // keep the operator tree + the scan details; trim the long column lists
-        val lines = plan.linesIterator.toSeq
-        val treeEnd = lines.indexWhere(_.trim.isEmpty) match {
-          case -1 => lines.size
-          case i  => i
-        }
-        val tree = lines.take(treeEnd)
-        val details = lines.drop(treeEnd).filter(l =>
-          l.contains("PushedFilters") || l.contains("ReadSchema") ||
-          l.contains("Location") || l.startsWith("(") && l.contains("Scan parquet"))
-        sb.append(tree.mkString("\n"))
-        sb.append("\n--- scan details ---\n")
-        sb.append(details.map(_.take(200)).mkString("\n"))
-        sb.append("\n```\n\n")
+    qs.foreach { q =>
+      val (name, a) = (q.name, audit(spark, q, sf))
+      kindError(q, a.streams).foreach(e => throw new IllegalStateException(e))
+      val rec = a.record
+      records += rec
+      a.plan match {
+        case None =>
+          val note = streamingNotes.getOrElse(name, "streaming gate")
+          sb.append(s"## $name (streaming gate)\n\n$note\n\n")
+          sb.append(s"Executed micro-batch plan invariants (last batch): " +
+            s"state_ops=${rec.stateOps}, mode=${rec.mode}, " +
+            s"exchanges=${rec.exchanges}, bnlj=${rec.bnlj}, " +
+            s"cartesian=${rec.cartesian}.\n\n")
+        case Some(plan) =>
+          val note = audited.getOrElse(name,
+            "Auto-audited: plan-shape invariants pinned in plan_invariants.tsv (PlanInvariantsSpec).")
+          sb.append(s"## $name\n\n$note\n\n```\n")
+          // keep the operator tree + the scan details; trim the long column lists
+          val lines = plan.linesIterator.toSeq
+          val treeEnd = lines.indexWhere(_.trim.isEmpty) match {
+            case -1 => lines.size
+            case i  => i
+          }
+          val tree = lines.take(treeEnd)
+          val details = lines.drop(treeEnd).filter(l =>
+            l.contains("PushedFilters") || l.contains("ReadSchema") ||
+            l.contains("Location") || l.startsWith("(") && l.contains("Scan parquet"))
+          sb.append(tree.mkString("\n"))
+          sb.append("\n--- scan details ---\n")
+          sb.append(details.map(_.take(200)).mkString("\n"))
+          sb.append("\n```\n\n")
       }
     }
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/PLANS.md"), sb.toString)
     Files.writeString(Paths.get(s"$outDir/plan_invariants.tsv"),
       (tsvHeader +: records.map(_.tsvLine)).mkString("", "\n", "\n"))
-    println(s"wrote $outDir/PLANS.md (${allNames.size} entries) and " +
+    println(s"wrote $outDir/PLANS.md (${qs.size} entries) and " +
       s"$outDir/plan_invariants.tsv (${records.size} records)")
     spark.stop()
   }

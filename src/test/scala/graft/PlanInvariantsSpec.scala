@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.{Gate, Q}
 import graft.tools.PlanAudit
 
 /** The asserting half of the plan audit: recomputes every registry
@@ -25,16 +26,20 @@ class PlanInvariantsSpec extends SparkSpec {
     PlanAudit.parseTsv(java.nio.file.Files.readString(
       java.nio.file.Paths.get("docs/plan_invariants.tsv")))
 
+  /** Every registry query run once under stream capture, in name order. */
+  private lazy val audits: Seq[(Q, PlanAudit.Audit)] =
+    SparkEntry.registry.sortBy(_.name)
+      .map(q => q -> PlanAudit.audit(spark, q, PlanAudit.invariantSf))
+
   private lazy val current: Map[String, PlanAudit.PlanRecord] =
-    PlanAudit.batchQueryNames
-      .map(n => n -> PlanAudit.record(spark, n, PlanAudit.invariantSf)).toMap
+    audits.map { case (q, a) => q.name -> a.record }.toMap
 
-  private lazy val currentStream: Map[String, PlanAudit.PlanRecord] =
-    PlanAudit.streamingQueryNames
-      .map(n => n -> PlanAudit.streamRecord(spark, n, PlanAudit.invariantSf)).toMap
+  private def allNames: Seq[String] = audits.map(_._1.name)
 
-  private def allNames: Seq[String] =
-    PlanAudit.batchQueryNames ++ PlanAudit.streamingQueryNames
+  test("every query's declared kind matches what it runs: a Gate starts streams, nothing else does") {
+    val wrong = audits.flatMap { case (q, a) => PlanAudit.kindError(q, a.streams) }
+    assert(wrong.isEmpty, "Q.kind declarations disagree with the queries:\n" + wrong.mkString("\n"))
+  }
 
   test("every registry query (batch AND streaming) has a golden plan-invariant record") {
     val missing = allNames.filterNot(golden.contains)
@@ -46,9 +51,8 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("plan-shape records match the golden file (no silent plan regressions)") {
-    val combined = current ++ currentStream
     val diffs = allNames.flatMap { n =>
-      (golden.get(n), combined.get(n)) match {
+      (golden.get(n), current.get(n)) match {
         case (Some(g), Some(c)) if g != c =>
           Some(s"$n:\n  golden : ${g.tsvLine}\n  current: ${c.tsvLine}")
         case _ => None
@@ -61,7 +65,7 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("no CartesianProduct anywhere; BNLJ only on documented tiny sides") {
-    val all = current.values ++ currentStream.values
+    val all = current.values
     val cart = all.filter(_.cartesian > 0).map(_.name).toSeq.sorted
     assert(cart.isEmpty, s"CartesianProduct in: ${cart.mkString(", ")}")
     val badBnlj = all
@@ -74,29 +78,23 @@ class PlanInvariantsSpec extends SparkSpec {
   test("streaming gates carry executed-plan evidence: a real sink mode, state where claimed") {
     // every streaming record must come from an actual micro-batch (mode
     // is the IncrementalExecution's, never the "batch" placeholder), and
-    // the stateless gates are exactly the documented stateless set
-    // stateless appenders: stream-static joins (ANN probe, range join),
-    // the per-row tagger, and the two foreachBatch sinks — q304 is
-    // stateless IN THE ENGINE by design: its per-user state lives in the
-    // batchId-versioned parquet table its foreachBatch maintains, which
-    // is the point of the gate (hot-key state off the store's hash
-    // partitioning)
-    // q311 is q304's class: its per-user counters live in the versioned
-    // parquet table its foreachBatch maintains, where the erasure
-    // anti-join can purge ALL accumulated state per request batch —
-    // store-keyed state would need a full key scan for the same purge
-    // q314 is q311's delta twin: same versioned-table device, state
-    // range-bucketed so a batch rewrites only touched buckets
-    val stateless = Set("q127_streaming_ann", "q220_streaming_range_join",
-      "q154_foreach_batch_sink", "q204_streaming_tagging",
-      "q304_streaming_salted_staleness", "q311_streaming_erasure",
-      "q314_streaming_erasure_delta")
-    currentStream.values.foreach { r =>
-      assert(r.mode != "batch", s"${r.name}: no executed micro-batch plan captured")
-      if (stateless(r.name))
-        assert(r.stateOps == 0, s"${r.name}: expected stateless, got ${r.stateOps} state ops")
-      else
-        assert(r.stateOps > 0, s"${r.name}: claimed stateful but no state operator in the executed plan")
+    // each gate holds a state operator exactly when it is declared
+    // Gate(stateful = true). The stateless gates are the stream-static
+    // joins (ANN probe, range join), the per-row tagger, q256's observe
+    // pass-through, and the foreachBatch sinks — q304/q311/q314/q320 keep their per-key state
+    // in a batchId-versioned parquet table their foreachBatch maintains,
+    // off the store's hash partitioning, where q311's erasure anti-join
+    // can purge it per request batch and q314 rewrites only touched
+    // range buckets
+    audits.foreach {
+      case (Q(name, _, _, Gate(stateful)), a) =>
+        val r = a.record
+        assert(r.mode != "batch", s"$name: no executed micro-batch plan captured")
+        if (stateful)
+          assert(r.stateOps > 0, s"$name: claimed stateful but no state operator in the executed plan")
+        else
+          assert(r.stateOps == 0, s"$name: expected stateless, got ${r.stateOps} state ops")
+      case _ =>
     }
   }
 }

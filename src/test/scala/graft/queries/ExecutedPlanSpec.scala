@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -38,9 +39,8 @@ class ExecutedPlanSpec extends SparkSpec {
     df.sparkSession.listenerManager.register(listener)
     try {
       df.write.format("noop").mode("overwrite").save()
-      // listener events ride the async SQL listener bus
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      // listener events ride the async listener bus: drain it
+      ListenerBusBridge.drain(spark.sparkContext)
       val qe = captured.getOrElse(fail("writer QueryExecution never reported"))
       val plan = qe.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"executed plan lost the merge join:\n$plan")
@@ -61,8 +61,7 @@ class ExecutedPlanSpec extends SparkSpec {
     df.sparkSession.listenerManager.register(listener)
     try {
       df.write.format("noop").mode("overwrite").save()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      ListenerBusBridge.drain(spark.sparkContext)
       val qe = captured.getOrElse(fail("writer QueryExecution never reported"))
       val plan = qe.executedPlan.toString
       val sel = "SelectedBucketsCount: (\\d+) out of 8".r.findFirstMatchIn(plan)

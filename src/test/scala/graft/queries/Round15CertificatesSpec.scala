@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.Curation
 import org.apache.spark.sql.functions._
 
 /** Certificates for the round-15 optimization changes: invariants the
@@ -64,28 +65,25 @@ class Round15CertificatesSpec extends SparkSpec {
 
   test("q134/q293 dedupe-first distinct counts equal COUNT(DISTINCT) per column") {
     // The r15 profile rewrites count distinct values as distinct
-    // (col_name, value-string) pairs. Parity needs the cast to be
-    // injective per column AND NULLs excluded — pinned here on a frame
-    // with NULLs, duplicate values, and values equal across columns
-    // (long 1 vs string "1" must not merge across col_name).
+    // (col_name, value-string) pairs (Curation.distinctCounts). Parity
+    // needs the cast to be injective per column AND NULLs excluded —
+    // pinned here on a frame with NULLs, duplicate values, values equal
+    // across columns (long 1 vs string "1" must not merge across
+    // col_name), and a double column holding 0.0, −0.0 and NaN: −0.0 and
+    // 0.0 cast to different strings but COUNT(DISTINCT) counts them once.
     val df = Seq(
-      (Option(1L), Option("1"), Option(java.sql.Date.valueOf("2024-01-01"))),
-      (Option(1L), Option("1.0"), None),
-      (None, Option("x"), Option(java.sql.Date.valueOf("2024-01-01"))),
-      (Option(10L), None, Option(java.sql.Date.valueOf("2024-02-01")))
-    ).toDF("a", "b", "dt")
-    val cols = Seq("a", "b", "dt")
-    val dist = df
-      .select(explode(array(cols.map { c =>
-        struct(lit(c).as("c"), col(c).cast("string").as("v"))
-      }: _*)).as("p"))
-      .select(col("p.c").as("col_name"), col("p.v").as("v"))
-      .distinct()
-      .groupBy("col_name").agg(count(col("v")).as("n_distinct"))
+      (Option(1L), Option("1"), Option(java.sql.Date.valueOf("2024-01-01")), Option(0.0d)),
+      (Option(1L), Option("1.0"), None, Option(-0.0d)),
+      (None, Option("x"), Option(java.sql.Date.valueOf("2024-01-01")), Option(Double.NaN)),
+      (Option(10L), None, Option(java.sql.Date.valueOf("2024-02-01")), None)
+    ).toDF("a", "b", "dt", "x")
+    val cols = Seq("a", "b", "dt", "x")
+    val dist = Curation.distinctCounts(df, cols)
       .orderBy("col_name").as[(String, Long)].collect().toSeq
     val expected = cols.sorted.map { c =>
       c -> df.agg(countDistinct(col(c))).as[Long].head()
     }
+    assert(expected.contains("x" -> 2L), s"fixture lost its −0.0/NaN case: $expected")
     assert(dist == expected,
       s"dedupe-first per-column distinct diverged: $dist vs $expected")
   }
